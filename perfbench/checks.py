@@ -170,6 +170,9 @@ def check_connection(g: GraphOracle, res: dict, steps: list | None, a: str, b: s
     if not res["success"]:
         return [] if math.isinf(want) else [
             f"find_connection({src}, {dst}): no path reported, reference {want}"]
+    if math.isinf(res["dist"]):
+        return [f"find_connection({src}, {dst}): success with dist inf (a path through a "
+                f"blacklisted edge), reference {want}"]
     if math.isinf(want) or not _close(res["dist"], want):
         return [f"find_connection({src}, {dst}): dist {res['dist']}, reference {want}"]
     path = res["path"]

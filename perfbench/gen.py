@@ -11,7 +11,7 @@ in-degree.
 Properties the graph layers depend on, all set from the seed:
 
 - communities: spouse, child and influenced_by edges fall inside a
-  person's community with probability ``p_in``; each community also
+  person's community with probability ``P_IN``; each community also
   prefers one institution, so link prediction has signal;
 - hub skew: ``educated_at`` targets follow a Zipf popularity over the
   institutions, and the largest in-degree is recorded;
@@ -33,7 +33,6 @@ import json
 import os
 import random
 import unicodedata
-from dataclasses import asdict, dataclass
 
 ENTITY = "http://www.wikidata.org/entity/"
 RELATIONS = ("spouse", "child", "influenced_by", "educated_at")
@@ -64,29 +63,25 @@ PLACES = [
 ]
 
 
-@dataclass(frozen=True)
-class Size:
-    """Graph size knobs. ``persons`` counts the main component;
-    island families come on top."""
-
-    persons: int
-    communities: int
-    institutions: int
-    zipf_s: float
-    p_in: float = 0.9
-    p_pref: float = 0.9
-    spouse_frac: float = 0.35
-    child_frac: float = 0.45
-    influence_frac: float = 0.35
-    second_school_frac: float = 0.5
-    island_families: int = 8
-    homonym_pairs: int = 12
-    typos: int = 40
-    exact_dups: int = 60
-    reverse_dups: int = 80
-    malformed_uris: int = 40
-    unresolved_labels: int = 40
-    control_chars: int = 30
+# Graph size and shape. The sizes are small on purpose: at this size
+# every Spark job is dominated by fixed per-job driver overhead, so a
+# larger graph adds wall time, not signal (see README.md).
+PERSONS = 500  # main component; island families come on top
+COMMUNITIES = 10
+INSTITUTIONS = 36
+# Zipf exponent of institution popularity, and of the serve workload's
+# request names (an assumption, not measured; see README.md)
+ZIPF_S = 1.1
+P_IN = 0.9  # spouse/child/influence partner drawn from the own community
+P_PREF = 0.9  # a person attends the community's preferred institution
+SPOUSE_FRAC, CHILD_FRAC, INFLUENCE_FRAC = 0.35, 0.45, 0.35
+SECOND_SCHOOL_FRAC = 0.5
+ISLAND_FAMILIES = 8
+HOMONYM_PAIRS = 12
+TYPOS = 40
+# planted dirt rows per kind
+EXACT_DUPS, REVERSE_DUPS, MALFORMED_URIS, UNRESOLVED_LABELS = 60, 80, 40, 40
+CONTROL_CHARS = 30  # persons whose label carries control characters
 
 
 def fold(s: str) -> str:
@@ -137,18 +132,18 @@ def _typo(rng: random.Random, name: str) -> str:
     return name[:i] + name[i + 1:]
 
 
-def generate(seed: int, size: Size, out_dir: str) -> dict:
+def generate(seed: int, out_dir: str) -> dict:
     """Write the raw files under ``out_dir`` and return the truth."""
     rng = random.Random(seed)
     os.makedirs(out_dir, exist_ok=True)
 
     # --- persons: names, communities, birth years ------------------
-    n_main = size.persons
-    fam_sizes = [rng.randint(3, 4) for _ in range(size.island_families)]
+    n_main = PERSONS
+    fam_sizes = [rng.randint(3, 4) for _ in range(ISLAND_FAMILIES)]
     n_all = n_main + sum(fam_sizes)
     pids = [f"Q{1000 + i}" for i in range(n_all)]
-    community = {pid: (i % size.communities if i < n_main else -1) for i, pid in enumerate(pids)}
-    era = [rng.randint(1780, 1960) for _ in range(size.communities)]
+    community = {pid: (i % COMMUNITIES if i < n_main else -1) for i, pid in enumerate(pids)}
+    era = [rng.randint(1780, 1960) for _ in range(COMMUNITIES)]
     year = {}
     for i, pid in enumerate(pids):
         c = community[pid]
@@ -166,19 +161,19 @@ def generate(seed: int, size: Size, out_dir: str) -> dict:
                 break
     main = pids[:n_main]
     homonyms = []
-    for a, b in zip(*[iter(rng.sample(main, 2 * size.homonym_pairs))] * 2):
+    for a, b in zip(*[iter(rng.sample(main, 2 * HOMONYM_PAIRS))] * 2):
         used.discard(fold(names[b]))
         names[b] = names[a]
         homonyms.append([a, b])
 
     # --- institutions with Zipf popularity --------------------------
-    iids = [f"Q{900000 + j}" for j in range(size.institutions)]
+    iids = [f"Q{900000 + j}" for j in range(INSTITUTIONS)]
     inames = {}
     for j, iid in enumerate(iids):
         inames[iid] = f"University of {PLACES[j % len(PLACES)]} {j // len(PLACES) + 1}"
-    zw = zipf_weights(size.institutions, size.zipf_s)
+    zw = zipf_weights(INSTITUTIONS, ZIPF_S)
     # each community prefers one institution outside the top-ranked hubs
-    pref = {c: rng.randrange(size.institutions // 4, size.institutions) for c in range(size.communities)}
+    pref = {c: rng.randrange(INSTITUTIONS // 4, INSTITUTIONS) for c in range(COMMUNITIES)}
     members: dict[int, list[str]] = {}
     for pid in main:
         members.setdefault(community[pid], []).append(pid)
@@ -197,30 +192,30 @@ def generate(seed: int, size: Size, out_dir: str) -> dict:
 
     def partner(pid: str) -> str:
         c = community[pid]
-        if rng.random() < size.p_in:
+        if rng.random() < P_IN:
             return rng.choice(members[c])
         return rng.choice(main)
 
     married = set()
-    for pid in rng.sample(main, int(size.spouse_frac * n_main)):
+    for pid in rng.sample(main, int(SPOUSE_FRAC * n_main)):
         q = partner(pid)
         if pid in married or q in married or pid == q:
             continue
         if add(pid, "spouse", q):
             married.update((pid, q))
-    for pid in rng.sample(main, int(size.child_frac * n_main)):
+    for pid in rng.sample(main, int(CHILD_FRAC * n_main)):
         # parent of pid: an elder from the same community
         c = community[pid]
-        pool = members[c] if rng.random() < size.p_in else main
+        pool = members[c] if rng.random() < P_IN else main
         par = rng.choice(pool)
         if year[par] < year[pid]:
             add(par, "child", pid)
-    for pid in rng.sample(main, int(size.influence_frac * n_main)):
+    for pid in rng.sample(main, int(INFLUENCE_FRAC * n_main)):
         add(pid, "influenced_by", partner(pid))
     for pid in main:
-        schools = {pref[community[pid]] if rng.random() < size.p_pref else rng.choices(range(size.institutions), zw)[0]}
-        if rng.random() < size.second_school_frac:
-            schools.add(rng.choices(range(size.institutions), zw)[0])
+        schools = {pref[community[pid]] if rng.random() < P_PREF else rng.choices(range(INSTITUTIONS), zw)[0]}
+        if rng.random() < SECOND_SCHOOL_FRAC:
+            schools.add(rng.choices(range(INSTITUTIONS), zw)[0])
         for j in sorted(schools):
             add(pid, "educated_at", iids[j])
     # island families: spouse pair + children, nothing else
@@ -241,7 +236,7 @@ def generate(seed: int, size: Size, out_dir: str) -> dict:
     cands = [p for p in main if p not in homonym_ids]
     rng.shuffle(cands)
     for pid in cands:
-        if len(typos) >= size.typos:
+        if len(typos) >= TYPOS:
             break
         t = _typo(rng, names[pid])
         if fold(t) not in used and t not in typos:
@@ -251,7 +246,7 @@ def generate(seed: int, size: Size, out_dir: str) -> dict:
     label = dict(names) | inames
     otype = {pid: "human" for pid in pids} | {iid: INSTITUTION_TYPE for iid in iids}
     # persons whose label carries control characters in every row
-    ctrl_ids = set(rng.sample(main, size.control_chars))
+    ctrl_ids = set(rng.sample(main, CONTROL_CHARS))
 
     def shown(x: str) -> str:
         if x not in ctrl_ids:
@@ -272,17 +267,17 @@ def generate(seed: int, size: Size, out_dir: str) -> dict:
     spouse_edges = [e for e in edges if e[1] == "spouse"]
     dirt = {"exact_duplicates": 0, "reverse_duplicates": 0, "malformed_uris": 0,
             "unresolved_labels": 0}
-    for p, rel, o in rng.sample(edges, size.exact_dups):
+    for p, rel, o in rng.sample(edges, EXACT_DUPS):
         rows[rel].append(_binding(p, shown(p), o, shown(o), otype[o], year[p]))
         dirt["exact_duplicates"] += 1
     reverse_rows = set()
-    for p, rel, o in rng.sample(spouse_edges, min(size.reverse_dups, len(spouse_edges))):
+    for p, rel, o in rng.sample(spouse_edges, min(REVERSE_DUPS, len(spouse_edges))):
         rows[rel].append(_binding(o, shown(o), p, shown(p), "human", year[o]))
         reverse_rows.add((o, rel, p))
         dirt["reverse_duplicates"] += 1
         subjects.add(o)
     bad_uris = ["not-a-uri", ENTITY + "P{n}", ENTITY + "L{n}-S1", ENTITY + "Q{n}x"]
-    for i in range(size.malformed_uris):
+    for i in range(MALFORMED_URIS):
         a, b = rng.sample(main, 2)
         bad = rng.choice(bad_uris).format(n=rng.randint(1, 99999))
         rel = rng.choice(human_rels)
@@ -291,7 +286,7 @@ def generate(seed: int, size: Size, out_dir: str) -> dict:
         else:
             rows[rel].append(_binding(a, shown(a), bad, "Junk Entry", "human", year[a]))
         dirt["malformed_uris"] += 1
-    for i in range(size.unresolved_labels):
+    for i in range(UNRESOLVED_LABELS):
         a, b = rng.sample(main, 2)
         rel = rng.choice(human_rels)
         if i % 2:
@@ -332,7 +327,8 @@ def generate(seed: int, size: Size, out_dir: str) -> dict:
             indeg[o] = indeg.get(o, 0) + 1
     truth = {
         "seed": seed,
-        "size": asdict(size),
+        "size": {"persons": PERSONS, "communities": COMMUNITIES,
+                 "institutions": INSTITUTIONS, "zipf_s": ZIPF_S},
         "files": [os.path.basename(f) for f in files],
         "raw_bytes": raw_bytes,
         "bindings": n_bindings,

@@ -4,7 +4,7 @@
         --seed N --seconds S --trace {0,1}
 
 Run from the repository root. The command generates the workload's
-inputs from the seed, sets up three times (the median is ``setup_s``),
+inputs from the seed, sets up four times (the median is ``setup_s``),
 repeats whole units of work until ``--seconds`` have passed, checks
 every output against an independent reference, prints a report and
 ends with one JSON line: ``{"correct", "attempted", "failed",
@@ -24,14 +24,16 @@ import json
 import os
 import platform
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import threading
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 PKG = "social_link_prediction_spark"
-SETUPS = 3
+SETUPS = 4
 DRIVER_MEMORY = "1g"
 
 
@@ -93,37 +95,94 @@ def versions(spark) -> dict:
     }
 
 
+def _children() -> dict[int, list[int]]:
+    """Child pids of every process, read from /proc."""
+    children: dict[int, list[int]] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue
+        children.setdefault(ppid, []).append(int(d))
+    return children
+
+
+def _descendants(pid: int) -> list[int]:
+    children, out, todo = _children(), [], [pid]
+    while todo:
+        p = todo.pop()
+        out.append(p)
+        todo += children.get(p, [])
+    return out
+
+
+def _alive(pid: int) -> bool:
+    """Running, not a zombie waiting for its new parent to reap it."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except (OSError, IndexError):
+        return False
+
+
+def stop_jvm(wait_s: float = 30.0) -> None:
+    """End the JVM PySpark launched and every process under it (the
+    Python workers), and wait until each has exited. SparkSession.stop()
+    leaves the JVM running; it exits on its own only after it sees the
+    pipe from this process close, which would be after this process has
+    ended."""
+    from pyspark import SparkContext
+
+    gw = SparkContext._gateway
+    proc = getattr(gw, "proc", None)
+    if gw is None or proc is None:
+        return
+    tree = _descendants(proc.pid)
+    try:
+        gw.shutdown()
+    except Exception:
+        pass
+    SparkContext._gateway = SparkContext._jvm = None
+    proc.stdin.close()  # the JVM exits on end of input
+    try:
+        proc.wait(timeout=wait_s)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    deadline = time.monotonic() + wait_s
+    rest = [p for p in tree if p != proc.pid]
+    while rest:
+        rest = [p for p in rest if _alive(p)]
+        if rest and time.monotonic() > deadline:
+            for p in rest:
+                try:
+                    os.kill(p, signal.SIGKILL)
+                except OSError:
+                    pass
+        time.sleep(0.05)
+
+
 class Sampler:
     """Peak resident memory and CPU time of the Spark JVM and its
     descendants (the Python workers), read from /proc, plus the CPU
     time of this process (the PySpark driver side). Memory is sampled
-    every 50 ms; CPU time is the difference between entry and exit,
-    less the sampling thread's own time."""
+    every 50 ms; ``cpu()`` is the CPU time used so far, less the
+    sampling thread's own time."""
 
     def __init__(self, jvm_pid: int):
         self.jvm = jvm_pid
         self.peak_kb = 0
-        self.cpu_s = 0.0
         self._own_s = 0.0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
     def _tree(self) -> tuple[int, float]:
         """(resident KB, CPU seconds incl. reaped children) of the JVM tree."""
-        children: dict[int, list[int]] = {}
-        for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                with open(f"/proc/{d}/stat") as f:
-                    ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-            except (OSError, IndexError, ValueError):
-                continue
-            children.setdefault(ppid, []).append(int(d))
-        kb, ticks, todo = 0, 0, [self.jvm]
-        while todo:
-            pid = todo.pop()
-            todo += children.get(pid, [])
+        kb, ticks = 0, 0
+        for pid in _descendants(self.jvm):
             try:
                 with open(f"/proc/{pid}/statm") as f:
                     kb += int(f.read().split()[1]) * (os.sysconf("SC_PAGE_SIZE") // 1024)
@@ -133,33 +192,31 @@ class Sampler:
                 pass
         return kb, ticks / os.sysconf("SC_CLK_TCK")
 
-    def _cpu(self) -> float:
+    def cpu(self) -> float:
         t = os.times()
-        return self._tree()[1] + t.user + t.system
+        return self._tree()[1] + t.user + t.system - self._own_s
 
     def _loop(self) -> None:
         start = time.thread_time()
         while not self._stop.is_set():
             self.peak_kb = max(self.peak_kb, self._tree()[0])
+            self._own_s = time.thread_time() - start
             self._stop.wait(0.05)
-        self._own_s = time.thread_time() - start
 
     def __enter__(self):
-        self._cpu0 = self._cpu()
         self._thread.start()
         return self
 
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join(timeout=5)
-        self.peak_kb = max(self.peak_kb, self._tree()[0])
-        self.cpu_s = self._cpu() - self._cpu0 - self._own_s
 
 
 class Ctx:
     def __init__(self, root, work, seed, tracer):
         self.root, self.work, self.seed, self.tracer = root, work, seed, tracer
         self.spark_conf = spark_conf(work)
+        self.cpu = lambda: 0.0  # the Sampler's, once Spark runs
         self._req = 0
 
     def next_request(self) -> int:
@@ -168,9 +225,9 @@ class Ctx:
 
 
 def measure(workload, seconds: float) -> dict:
-    """Set up SETUPS times, then run whole units until ``seconds``
-    have passed; returns the set-up times, the timed ops and the peak
-    RSS of the measured units."""
+    """Set up SETUPS times, then run whole units until ``seconds`` have
+    passed; returns the set-up times, the timed ops, and the peak RSS
+    and CPU time of the measured units."""
     setups = []
     for i in range(SETUPS):
         if i:
@@ -181,16 +238,18 @@ def measure(workload, seconds: float) -> dict:
         setups.append(time.perf_counter() - t)
     jvm = workload.spark._jvm.java.lang.ProcessHandle.current().pid()
     ops, units = [], 0
-    with Sampler(jvm) as rss:
-        t0 = time.perf_counter()
+    with Sampler(jvm) as smp:
+        workload.ctx.cpu = smp.cpu
+        cpu0, t0 = smp.cpu(), time.perf_counter()
         while True:
             ops += workload.unit()
             units += 1
             elapsed = time.perf_counter() - t0
             if elapsed >= seconds:
                 break
+        cpu_s = smp.cpu() - cpu0
     return {"setups": setups, "ops": ops, "units": units, "elapsed": elapsed,
-            "peak_rss_mb": rss.peak_kb / 1024, "cpu_s": rss.cpu_s}
+            "peak_rss_mb": smp.peak_kb / 1024, "cpu_s": cpu_s}
 
 
 def end_to_end(name: str, wl, res: dict) -> dict:
@@ -206,6 +265,7 @@ def end_to_end(name: str, wl, res: dict) -> dict:
     failed = sum(not o.ok for o in ops)
     common = {
         "setup_s": (statistics.median(res["setups"]), "s"),
+        "cold_setup_s": (res["setups"][0], "s"),
         "peak_rss_mb": (res["peak_rss_mb"], "MB"),
         "throughput_per_s": (throughput, "1/s"),
         "cpu_s_per_op": (res["cpu_s"] / len(per_unit), "s"),
@@ -231,6 +291,9 @@ def main(argv=None) -> int:
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
+    started = time.perf_counter()
+    # a terminated run still stops the JVM (the finally clause below)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
 
     root = os.getcwd()
     if not os.path.isfile(os.path.join(root, PKG, "__init__.py")):
@@ -272,9 +335,13 @@ def main(argv=None) -> int:
                 1.0 - calls.get("search.fuzzy.rescore", 0) / lookups if lookups else 0.0)
             ratios["application.jobs_per_request"] = jobs / max(reqs, 1)
     finally:
-        wl.stop()
-        shutil.rmtree(work, ignore_errors=True)
+        try:
+            wl.stop()
+        finally:
+            stop_jvm()
+            shutil.rmtree(work, ignore_errors=True)
     env["loadavg_end"] = os.getloadavg()
+    env["run_s"] = time.perf_counter() - started  # the report and its JSON line excluded
     env["setups_s"] = res["setups"]
 
     ops = res["ops"]
@@ -283,7 +350,8 @@ def main(argv=None) -> int:
     record = {
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": args.trace, "env": env, "units": res["units"],
-        "ops": [{"kind": o.kind, "seconds": o.seconds, "ok": o.ok} for o in ops],
+        "ops": [{"kind": o.kind, "seconds": o.seconds, "cpu_s": o.cpu_s, "ok": o.ok}
+                for o in ops],
         "errors": errors, "end_to_end": metrics,
     }
     stem = os.path.join(out_dir, f"{args.workload}-seed{args.seed}-trace{args.trace}")

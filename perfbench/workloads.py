@@ -14,22 +14,18 @@ import traceback
 import checks
 import gen
 
-# Sizes are chosen so one run, Spark start-up included, stays well
-# inside the time budget on a 4-core machine; the Spark jobs are
-# dominated by per-job driver overhead at these sizes, so a larger
-# graph mostly adds wall time, not signal (see README.md).
-GRAPH_SIZE = gen.Size(persons=500, communities=10, institutions=36, zipf_s=1.1)
-
 FIND_MAX_HOPS = 3
 DEGREE_PAIRS, DEGREE_MAX_HOPS = 16, 8
 PAGERANK_ITERATIONS = 5
 AUC_FLOOR = 0.76
 RECOMMEND_K = 10
-# One serve round, in this order every round: the first requests of a
-# run pay the cold JIT and Python-worker start-up, so a fixed order
-# charges that cost to the same request types in every run.
-ROUND = ("resolve_exact", "resolve_fuzzy", "find_connection", "recommend", "predict",
-         "resolve_exact")
+# One serve round, in this order every round. The mix is an assumption,
+# not taken from a trace (see README.md): one request of each type, two
+# exact lookups, and find_connection once on a pair joined within
+# FIND_MAX_HOPS and once on a pair the reference finds unreachable
+# within it.
+ROUND = ("resolve_exact", "resolve_fuzzy", "find_connection", "find_unreachable",
+         "recommend", "predict", "resolve_exact")
 
 
 class Op:
@@ -38,6 +34,8 @@ class Op:
     def __init__(self, kind: str):
         self.kind = kind
         self.seconds = 0.0
+        self.cpu_s = 0.0
+        self.who: tuple = ()  # the persons a request names
         self.ok = True
         self.data: dict = {}
 
@@ -68,7 +66,7 @@ class Workload:
         op = Op(kind)
         tr = self.ctx.tracer
         tr.request = self.ctx.next_request()
-        t = time.perf_counter()
+        c, t = self.ctx.cpu(), time.perf_counter()
         try:
             with tr.span("bench", kind):
                 op.data = fn(*args)
@@ -76,6 +74,7 @@ class Workload:
             traceback.print_exc()
             op.ok = False
         op.seconds = time.perf_counter() - t
+        op.cpu_s = self.ctx.cpu() - c
         tr.request = None
         return op
 
@@ -84,7 +83,7 @@ class Workload:
 class _GraphWorkload(Workload):
     def prepare(self) -> None:
         w = self.ctx.work
-        self.truth = gen.generate(self.ctx.seed, GRAPH_SIZE, os.path.join(w, "raw"))
+        self.truth = gen.generate(self.ctx.seed, os.path.join(w, "raw"))
         self.oracle = checks.GraphOracle(self.truth)
         self.rng = random.Random(self.ctx.seed * 7 + len(self.name))
 
@@ -119,7 +118,7 @@ class Serve(_GraphWorkload):
         persons = list(self.truth["persons"])
         self.rng.shuffle(persons)
         self.popular = persons
-        self.zipf = gen.zipf_weights(len(persons), 1.1)
+        self.zipf = gen.zipf_weights(len(persons), gen.ZIPF_S)
         self.typos = sorted(self.truth["typos"].items())
         self.homonym_ids = {p for pair in self.truth["homonyms"] for p in pair}
 
@@ -147,17 +146,18 @@ class Serve(_GraphWorkload):
         name = self.truth["names"][pid]
         return gen.fold(name) if self.rng.random() < 1 / 3 else name
 
-    def _pair(self, unique: bool = False, connected: bool = False) -> tuple[str, str]:
-        """Two popular people with different names; ``connected``:
-        joined within FIND_MAX_HOPS."""
+    def _pair(self, unique: bool = False, joined: bool | None = None) -> tuple[str, str]:
+        """Two popular people with different names. ``joined`` True or
+        False: the reference finds a path of at most FIND_MAX_HOPS
+        finite-weight edges between them, or finds none."""
         names = self.truth["names"]
         while True:
             a, b = self._pick(unique), self._pick(unique)
             if gen.fold(names[a]) == gen.fold(names[b]):
                 continue
-            if connected and math.isinf(self.oracle.hop_bounded_dist(a, b, FIND_MAX_HOPS)):
-                continue
-            return a, b
+            if joined is None or joined != math.isinf(
+                    self.oracle.hop_bounded_dist(a, b, FIND_MAX_HOPS)):
+                return a, b
 
     def unit(self) -> list[Op]:
         names = self.truth["names"]
@@ -168,23 +168,28 @@ class Serve(_GraphWorkload):
                 q = self._query_name(pid)
                 op = self.timed(kind, lambda q=q: {"rows": _rows(self.svc.analysis.resolve(q))})
                 op.data.update(query=q, want=pid)
+                op.who = (pid,)
             elif kind == "resolve_fuzzy":
                 q, pid = self.rng.choice(self.typos)
                 op = self.timed(kind, lambda q=q: {"rows": _rows(self.svc.analysis.resolve(q))})
                 op.data.update(query=q, want=pid)
-            elif kind == "find_connection":
-                a, b = self._pair(unique=True, connected=True)
+                op.who = (pid,)
+            elif kind.startswith("find_"):
+                a, b = self._pair(unique=True, joined=kind == "find_connection")
                 op = self.timed(kind, self._find, names[a], names[b])
+                op.who = (a, b)
             elif kind == "recommend":
                 pid = self._pick(unique=True)
                 op = self.timed(kind, lambda n=names[pid]: {"rows": _rows(
                     self.svc.recommend(n, k=RECOMMEND_K))})
                 op.data.update(src=pid)
+                op.who = (pid,)
             else:
                 a, b = self._pair(unique=True)
                 op = self.timed(kind, lambda na=names[a], nb=names[b]: {"rows": _rows(
                     self.svc.predict_link_score(na, nb))})
                 op.data.update(a=a, b=b)
+                op.who = (a, b)
             ops.append(op)
         return ops
 
@@ -203,7 +208,7 @@ class Serve(_GraphWorkload):
             d = op.data
             if op.kind.startswith("resolve"):
                 e = checks.check_resolve(d["rows"], d["query"], d["want"], op.kind == "resolve_exact")
-            elif op.kind == "find_connection":
+            elif op.kind.startswith("find_"):
                 e = checks.check_connection(g, d["res"], d["steps"], d["a"], d["b"], FIND_MAX_HOPS)
             elif op.kind == "recommend":
                 e = checks.check_recommend(g, d["rows"], d["src"], RECOMMEND_K)
@@ -216,20 +221,26 @@ class Serve(_GraphWorkload):
     def metrics(self, ops: list[Op], elapsed: float) -> dict:
         lat = [o.seconds for o in ops]
         q, tail = _tail(lat)
+        seen, repeats = set(), 0  # requests naming someone named before
+        for o in ops:
+            repeats += bool(seen & set(o.who))
+            seen.update(o.who)
         m = {
             "requests_per_s": (len(ops) / elapsed, "req/s"),
             "latency_p50_s": (_median(lat), "s"),
             "latency_tail_s": (tail, "s"),
             "latency_tail_percentile": (q, "percentile"),
             "latency_samples": (len(lat), "count"),
+            "repeat_share": (repeats / len(ops), "ratio"),
         }
         for kind in dict.fromkeys(ROUND):
-            xs = [o.seconds for o in ops if o.kind == kind]
-            m[f"{kind}_p50_s"] = (_median(xs) if xs else None, "s")
+            xs = [o for o in ops if o.kind == kind]
+            m[f"{kind}_p50_s"] = (_median([o.seconds for o in xs]) if xs else None, "s")
+            m[f"{kind}_cpu_s"] = (_median([o.cpu_s for o in xs]) if xs else None, "s")
         return m
 
     def ratios(self, ops: list[Op]) -> dict:
-        fc = [o for o in ops if o.kind == "find_connection" and o.ok]
+        fc = [o for o in ops if o.kind.startswith("find_") and o.ok]
         return {"graph.paths.reached_ratio":
                 sum(o.data["res"]["success"] for o in fc) / max(len(fc), 1)}
 
@@ -341,8 +352,8 @@ class Batch(_GraphWorkload):
         return errs
 
     def metrics(self, ops: list[Op], elapsed: float) -> dict:
-        def med(kind):
-            xs = [o.seconds for o in ops if o.kind == kind and o.ok]
+        def med(kind, attr="seconds"):
+            xs = [getattr(o, attr) for o in ops if o.kind == kind and o.ok]
             return _median(xs) if xs else None
 
         etl = [o for o in ops if o.kind == "etl" and o.ok]
@@ -359,7 +370,8 @@ class Batch(_GraphWorkload):
             "pagerank_s": (med("pagerank"), "s"),
             "train_eval_s": (med("train_eval"), "s"),
             "auc": (round(auc[0], 6) if auc else None, "ratio"),
-        }
+        } | {f"{k}_cpu_s": (med(k, "cpu_s"), "s")
+             for k in ("etl", "compute_degrees", "pagerank", "train_eval")}
 
     def ratios(self, ops: list[Op]) -> dict:
         """Counted after the timed window (extra Spark jobs)."""
